@@ -11,9 +11,9 @@ at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 Timing policy: one shared SparkSession for the whole run (JVM startup and
 plan caching amortized, as a real deployment would); per-query time is
 build-plan + execute + collect to the driver, the end-to-end latency a
-user observes. A warmup run of the flagship primes the JVM (codegen,
-parquet footer caches) before timing starts — we measure steady-state
-engine throughput, not first-query JIT noise.
+user observes. A warmup pass over the headline queries primes the JVM
+(JIT, codegen classes, parquet footer caches) before timing starts — we
+measure steady-state engine throughput, not first-query JIT noise.
 
 r10 (optimization round): the dedup/kmeans index consumers additionally
 report "<name>__cold" entries — one timed run each with the session
@@ -73,12 +73,14 @@ def main() -> None:
     reg = get_registry()
     headline = [name for name, qd in sorted(reg.items()) if qd.headline]
 
-    # Warmup: one untimed pass over every headline query primes JVM JIT,
-    # whole-stage codegen compilation (seconds for the wide lambda
-    # expressions in the dedup family), and parquet footer caches — the
-    # timed runs then measure steady-state engine throughput, which is
-    # what this bench claims (module docstring), not first-run
-    # compilation noise.
+    # Warmup: one untimed pass over every headline query primes JVM JIT
+    # and parquet footer caches, and compiles the whole-stage codegen
+    # classes (seconds for the wide lambda expressions in the dedup
+    # family). The compiled classes stay primed only while the session's
+    # generated-class cache holds the whole pass (get_spark sizes it;
+    # Spark's default of 100 entries evicts them all). The min-of-3
+    # below cannot show that eviction: it repeats each query back to
+    # back, and one query's 15-35 classes fit even the default cache.
     for name in headline:
         reg[name].builder(spark, sf_dir).toPandas()
 
@@ -530,6 +532,13 @@ def main() -> None:
     # competitive ratio. (Of the four cache consumers only
     # q_cluster_kmeans has an oracle and sits in `comparable`.) The
     # warm numbers keep their own entries in `queries`/headline_total.
+    # A consumer whose __cold entry is missing (cold block skipped or
+    # aborted) is scored at its warm time, and named in
+    # ``comparable_fallbacks`` so the asymmetry is on the record.
+    comparable_fallbacks = [
+        n for n in comparable
+        if n in cold_consumers and f"{n}__cold" not in cold_timings
+    ]
     spark_cmp = round(
         sum(cold_timings.get(f"{n}__cold", timings[n]) for n in comparable),
         4,
@@ -554,6 +563,7 @@ def main() -> None:
         "cache_consumers": cold_consumers,
         "duckdb_oracle": duck,
         "comparable_queries": comparable,
+        "comparable_fallbacks": comparable_fallbacks,
         "write_path_queries": write_path,
         "demo_overhead_queries": demo_overhead,
         "quadratic_watch": quad_timings,

@@ -7,6 +7,8 @@
 This is the "switch from the reference" surface: every operator the
 engine implements is invocable by name against any testdata scale
 directory, with the same session defaults the driver and bench use.
+``run`` and ``explain`` print to stderr how many generated classes the
+query compiled and the Janino time they took (Spark's own codegen counters).
 """
 
 from __future__ import annotations
@@ -49,15 +51,22 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query {args.query!r}; try `list`", file=sys.stderr)
         return 2
 
-    from modforms_db_spark.session import get_spark
+    from modforms_db_spark.session import codegen_counters, get_spark
 
     spark = get_spark(f"mfdb-cli-{args.cmd}")
     spark.sparkContext.setLogLevel("ERROR")
+    classes0, ms0 = codegen_counters(spark)
     df = reg[args.query].builder(spark, args.sf_dir)
     if args.cmd == "explain":
         df.explain("formatted")
     else:
         df.show(args.n, truncate=False)
+    classes, ms = codegen_counters(spark)
+    print(
+        f"codegen: {classes - classes0} classes compiled, "
+        f"{ms - ms0:.0f} ms in Janino",
+        file=sys.stderr,
+    )
     return 0
 
 

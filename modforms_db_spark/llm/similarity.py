@@ -242,7 +242,9 @@ def ivf_cell_cs(e: DataFrame, c: DataFrame) -> DataFrame:
     broadcast nested-loop join. The embedding payload is dropped
     immediately — whatever ranks or groups this frame downstream moves
     3 scalar columns, never a vector."""
-    cs = F.round(_dot("emb", "cemb") / (F.col("nrm") * F.col("cnrm")), 4)
+    cs = F.round(
+        F.try_divide(_dot("emb", "cemb"), F.col("nrm") * F.col("cnrm")), 4
+    )
     return e.crossJoin(F.broadcast(c)).select("vec_id", "cid", cs.alias("cs"))
 
 
@@ -355,9 +357,22 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     replace — the kmeans packed-argmin trick pays off per ROUND of an
     iterative fit, not on a one-shot assignment whose groupBy already
     collapses map-side. (Round-5's floor note stands: the residual
-    runtime is local-mode stage scaffolding, not data.)"""
+    runtime is local-mode stage scaffolding, not data.)
+
+    Zero-norm queries are excluded from the output. A query whose
+    embedding is all zeros has a NULL cosine to every centroid (every
+    cosine is a ``try_divide``, so 0/0 is NULL with ANSI on or off), the
+    null-score guard in the probe leg drops all of its cells, and
+    ``explode`` emits no row for the empty probe set, so that q_id has no
+    rows at all (pinned in tests/test_edgecases.py). The shipped data has
+    no zero-norm embedding."""
     prep(spark)
-    e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
+    return ivf_topk(_emb(spark, sf_dir))
+
+
+def ivf_topk(e: DataFrame) -> DataFrame:
+    """:func:`q_sim_ivf_topk` over any ``(vec_id, emb)`` frame."""
+    e = e.withColumn("nrm", _norm("emb"))
     c = ivf_centroids(e)
     asg_ids = (
         ivf_cell_cs(e, c)
@@ -378,7 +393,9 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _cell_cs(cell: Column) -> Column:
         # Identical arithmetic to ivf_cell_cs: the rounded cosine fold.
         return F.round(
-            _dot(F.col("emb"), cell["cemb"]) / (F.col("nrm") * cell["cnrm"]),
+            F.try_divide(
+                _dot(F.col("emb"), cell["cemb"]), F.col("nrm") * cell["cnrm"]
+            ),
             4,
         )
 
@@ -422,7 +439,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") != F.col("q_id")
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     scored = cand.select("q_id", F.col("vec_id").alias("nb_id"), cos4)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))

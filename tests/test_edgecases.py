@@ -93,6 +93,24 @@ def test_ties_broken_deterministically(spark):
     assert a == c
 
 
+def test_ivf_topk_excludes_zero_norm_query(spark):
+    """q_sim_ivf_topk drops a zero-norm query (its cosines are all NULL, so
+    it probes no cell; under ANSI the 0/0 must not raise) and keeps every
+    other query's top 5."""
+    from modforms_db_spark.llm.similarity import ivf_topk
+
+    rows = [
+        (i, [0.0] * 4 if i == 17 else [(i * 7 + d * 3) % 11 - 4.5 for d in range(4)])
+        for i in range(40)
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    out = ivf_topk(e).toPandas()
+    want = {q: 5 for q in range(20) if q != 17}
+    assert out.groupby("q_id").size().to_dict() == want
+    assert 17 not in set(out.nb_id)
+    assert out.cos4.notna().all()
+
+
 def test_knn_symmetric_under_exact_cosine(spark):
     """Exact cosine is symmetric: if b is in a's candidate pairs with
     similarity s, then a is in b's with the same s (checked on the
