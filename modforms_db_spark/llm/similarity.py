@@ -21,12 +21,10 @@ multiply; exact kNN over 10^9 vectors is not a thing you shuffle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modforms_db_spark.io import load, spread
+from modforms_db_spark.io import cached, load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
@@ -1042,53 +1040,23 @@ def kmeans_fit(vecs: DataFrame, k: int, iters: int) -> DataFrame:
     return assigned.select("vec_id", "cluster", "d2q6")
 
 
-# (applicationId, normpath(sf_dir)) -> assigned (vec_id, cluster, d2q6).
-# The fitted registry-grain k-means assignment (fixed _KMEANS_K /
-# _KMEANS_ITERS over the embeddings table) is the shared substrate of
-# BOTH clustering consumers: `q_cluster_kmeans` (per-cluster sizes +
-# inertia) and `q_dedup_semantic` (SemDeDup blocking). In a real
-# deployment the fitted model/assignment is computed once per corpus
-# snapshot and PERSISTED (the cluster-index artifact), not refit per
-# query — this session cache models that, exactly like `_LSH_CORE_CACHE`
-# (llm/dedup.py, r9, judge-endorsed). Keyed by applicationId so a
-# restarted session (new SparkContext, dead localCheckpoint blocks) can
-# never serve stale frames; assumes sf_dir's parquet is immutable for
-# the session (the driver/test-fixture contract). MFDB_KMEANS_CACHE=0
-# forces per-call refits. Bounded FIFO (see _CACHE_MAX) + clear() so a
-# long-lived multi-dataset session can release checkpoint blocks
-# (r9 ADVICE on _LSH_CORE_CACHE — same policy applied here).
-_KMEANS_CORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CACHE_MAX = 8  # datasets per session before FIFO eviction
-
-
-def kmeans_core_cache_clear() -> None:
-    """Drop every cached assignment frame. Python-side refs are the only
-    thing pinning the lazily-checkpointed blocks — once dropped, the
-    JVM ContextCleaner reclaims them on the next GC cycle (the bench.py
-    per-query gc.collect() pattern)."""
-    _KMEANS_CORE_CACHE.clear()
-
-
 def kmeans_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry-grain fitted assignment: `kmeans_fit` over the
     embeddings table at the shared `_KMEANS_K`/`_KMEANS_ITERS`, lazily
-    checkpointed and cached per (session, dataset) — see
-    `_KMEANS_CORE_CACHE` above. Returns (vec_id, cluster, d2q6)."""
+    checkpointed and kept in the session cache (`io.cached`). It is the
+    shared substrate of both clustering consumers, `q_cluster_kmeans`
+    and `q_dedup_semantic`: the persisted cluster index of a deployment,
+    fitted once per corpus snapshot. Returns (vec_id, cluster, d2q6)."""
     prep(spark)
-    cache_on = os.environ.get("MFDB_KMEANS_CACHE", "1") != "0"
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if cache_on and key in _KMEANS_CORE_CACHE:
-        return _KMEANS_CORE_CACHE[key]
-    vecs = _emb(spark, sf_dir).select("vec_id", "emb")
-    assigned = kmeans_fit(vecs, _KMEANS_K, _KMEANS_ITERS).localCheckpoint(
-        eager=False  # materializes inside the first consuming action;
-        # later consumers (and later calls) read the blocks
-    )
-    if cache_on:
-        while len(_KMEANS_CORE_CACHE) >= _CACHE_MAX:
-            _KMEANS_CORE_CACHE.pop(next(iter(_KMEANS_CORE_CACHE)))
-        _KMEANS_CORE_CACHE[key] = assigned
-    return assigned
+
+    def build() -> DataFrame:
+        vecs = _emb(spark, sf_dir).select("vec_id", "emb")
+        return kmeans_fit(vecs, _KMEANS_K, _KMEANS_ITERS).localCheckpoint(
+            eager=False  # materializes inside the first consuming action;
+            # later consumers (and later calls) read the blocks
+        )
+
+    return cached(spark, sf_dir, "kmeans_core", build)
 
 
 def _kmeans_oracle() -> str:
@@ -1175,7 +1143,7 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     r10: the fit comes from `kmeans_core` — the session-cached fitted
     assignment shared with `q_dedup_semantic` (the persisted
     cluster-index production shape; cold ≡ cached pinned by contract
-    tests, MFDB_KMEANS_CACHE=0 escape hatch)."""
+    tests)."""
     prep(spark)
     assigned = kmeans_core(spark, sf_dir)
     return (

@@ -3,12 +3,12 @@
 
 Usage:
 
-    python scripts/dump_round_plans.py OUTDIR SUFFIX NAME [NAME ...]
+    python scripts/dump_round_plans.py [--cold] OUTDIR SUFFIX NAME [NAME ...]
 
 writes ``OUTDIR/<name>_<suffix>.txt`` for each query name, using
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1). Cold-path
-variants of the cached dedup/kmeans index consumers are produced by
-exporting ``MFDB_LSH_CACHE=0 MFDB_KMEANS_CACHE=0`` before invoking.
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1). ``--cold``
+clears the session cache before each query, giving the cold-path plans
+of the cached dedup/kmeans index consumers.
 
 The optimization-round before/after protocol: run this once from a
 worktree pinned at the prior round's HEAD (before) and once at the
@@ -27,11 +27,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    outdir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
+    args = sys.argv[1:]
+    cold = "--cold" in args
+    if cold:
+        args.remove("--cold")
+    outdir, suffix, names = args[0], args[1], args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(outdir, exist_ok=True)
 
+    from modforms_db_spark import io as mfio
     from modforms_db_spark.registry import get_registry
     from modforms_db_spark.session import get_spark
 
@@ -43,6 +47,8 @@ def main() -> None:
         if name not in reg:
             print(f"skip {name}: not in registry", file=sys.stderr)
             continue
+        if cold:
+            mfio.clear()
         df = reg[name].builder(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -50,10 +56,7 @@ def main() -> None:
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} — explain('formatted') @ {sf_dir}\n")
-            fh.write(
-                f"# caches: MFDB_LSH_CACHE={os.environ.get('MFDB_LSH_CACHE', '1')}"
-                f" MFDB_KMEANS_CACHE={os.environ.get('MFDB_KMEANS_CACHE', '1')}\n\n"
-            )
+            fh.write(f"# session cache: {'cold' if cold else 'warm'}\n\n")
             fh.write(buf.getvalue())
         print(f"wrote {path}")
 

@@ -17,14 +17,13 @@ import os
 import sys
 import time
 
-os.environ["MFDB_LSH_CACHE"] = "0"
-os.environ["MFDB_KMEANS_CACHE"] = "0"
 os.environ.setdefault("MFDB_SHUFFLE_PARTITIONS", "4")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
+from modforms_db_spark import io as mfio  # noqa: E402
 from modforms_db_spark.session import get_spark  # noqa: E402
 from modforms_db_spark.llm import dedup  # noqa: E402
 from modforms_db_spark.llm.dedup import _star_halve, connected_components  # noqa: E402
@@ -96,7 +95,8 @@ def main() -> None:
         assert r0 == r1, (r0, r1)
         print(f"contract graph n={len(edges)}: labels equal, rounds {r0}")
 
-    # Real rep graph.
+    # Real rep graph, built cold.
+    mfio.clear()
     core = dedup._lsh_groups_rep_pairs(spark, SF_DIR)
     rp = core[1].select(
         core[1].r1.alias("d1"), core[1].r2.alias("d2")

@@ -1,5 +1,9 @@
 #!/usr/bin/env python
-"""r11 fine-grained leg profile of the cold LSH core build (guide §1)."""
+"""r11 fine-grained leg profile of the cold LSH core build (guide §1).
+
+Each leg is rebuilt by hand from the documents reader, so no run reads
+an index from the session cache.
+"""
 
 from __future__ import annotations
 
@@ -8,8 +12,6 @@ import os
 import sys
 import time
 
-os.environ["MFDB_LSH_CACHE"] = "0"
-os.environ["MFDB_KMEANS_CACHE"] = "0"
 os.environ.setdefault("MFDB_SHUFFLE_PARTITIONS", "4")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """r11 leg profile of the fully-cold dedup index build (guide §1).
 
-Runs with both session caches disabled (MFDB_LSH_CACHE=0 /
-MFDB_KMEANS_CACHE=0) and times each leg of the cold
+Clears the session cache (``io.clear()``) before every run and times
+each leg of the cold
 q_dedup_fuzzy_apply / q_dedup_semantic paths in isolation, with job
 counts from the status tracker, so the round-11 work (VERDICT r10 item
 3: fully-cold fuzzy ≤ 4 s) starts from numbers, not guesses.
@@ -16,8 +16,6 @@ import os
 import sys
 import time
 
-os.environ["MFDB_LSH_CACHE"] = "0"
-os.environ["MFDB_KMEANS_CACHE"] = "0"
 os.environ.setdefault("MFDB_SHUFFLE_PARTITIONS", "4")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,13 +33,13 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    from modforms_db_spark.llm import dedup, similarity
+    from modforms_db_spark import io as mfio
+    from modforms_db_spark.llm import dedup
 
     def leg(label, fn):
         best, bj = float("inf"), 0
         for i in range(N):
-            dedup.lsh_core_cache_clear()
-            similarity.kmeans_core_cache_clear()
+            mfio.clear()
             import gc
 
             gc.collect()
@@ -79,7 +77,7 @@ def main() -> None:
     leg("core: groups only (noop groups)", groups_only)
 
     # Leg 2: CC labels given a prebuilt core (isolates connected_components).
-    dedup.lsh_core_cache_clear()
+    mfio.clear()
     core = dedup._lsh_groups_rep_pairs(spark, SF_DIR)
     core[1].write.format("noop").mode("overwrite").save()  # materialize
 

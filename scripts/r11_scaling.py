@@ -7,8 +7,8 @@ Run twice — `SPARK_GRAFT_CPUS=32 MFDB_SHUFFLE_PARTITIONS=96` and
 the production ~3×-cores guidance, SCALE.md §3; a fixed tiny width
 would cap both runs at the same parallelism and measure nothing) —
 and compare per-query seconds. Policy: warmup pass, then min-of-3
-toPandas (the bench's own policy); the fuzzy cold rebuild is min-of-2
-with caches disabled (the bench's __cold policy).
+toPandas (the bench's own policy); a cold rebuild clears the session
+cache before each run (the bench's __cold policy).
 
 One query per process (cross-query checkpoint-cleanup churn inside a
 shared session contaminated the first attempt — the same fuzzy rebuild
@@ -17,7 +17,7 @@ read 42 s at the tail of a shared session and 18.6 s isolated):
     python scripts/r11_scaling.py NAME [sf_dir]
 
 NAME = a registered query, or NAME__cold for the cache consumers
-(caches disabled + cleared per run, bench __cold policy).
+(session cache cleared per run, bench __cold policy).
 """
 
 from __future__ import annotations
@@ -36,13 +36,9 @@ def main() -> None:
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata_r11/sf1"
     cold = name.endswith("__cold")
     qname = name.removesuffix("__cold")
-    if cold:
-        os.environ["MFDB_LSH_CACHE"] = "0"
-        os.environ["MFDB_KMEANS_CACHE"] = "0"
-
     from modforms_db_spark.session import get_spark
     from modforms_db_spark.registry import get_registry
-    from modforms_db_spark.llm import dedup, similarity
+    from modforms_db_spark import io as mfio
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(f"r11-scaling-c{cpus}")
@@ -61,8 +57,7 @@ def main() -> None:
     best = float("inf")
     for _ in range(3):
         if cold:
-            dedup.lsh_core_cache_clear()
-            similarity.kmeans_core_cache_clear()
+            mfio.clear()
             drain()
         t0 = time.perf_counter()
         reg[qname].builder(spark, sf).toPandas()

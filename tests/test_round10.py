@@ -1,15 +1,16 @@
 """Round-10 behavior contracts.
 
 Pins the session's load-bearing claims beyond the generic suites:
-(1) the k-means core cache (the fitted-assignment substrate shared by
-q_cluster_kmeans and q_dedup_semantic) can never change results — cold
-refit ≡ cached serve for BOTH consumers — and is keyed by dataset;
+(1) the session cache of the k-means core (the fitted-assignment
+substrate shared by q_cluster_kmeans and q_dedup_semantic) can never
+change results — cold refit ≡ cached serve for BOTH consumers — and is
+keyed by dataset;
 (2) q_dedup_semantic's within-cluster pairwise leg is a broadcast-hash
 join (the probe side's cosine folds run in its spread layout, never in
 the panel's 4 shuffle partitions keyed on 8 cluster ids);
-(3) the session caches are bounded (FIFO) and clearable, so a
-long-lived multi-dataset session releases checkpoint blocks (r9 ADVICE
-on _LSH_CORE_CACHE, applied to both caches);
+(3) the session cache is bounded (LRU) and clearable, so a long-lived
+multi-dataset session releases checkpoint blocks, and an input
+rewritten in place is re-read rather than served stale;
 (4) kmeans_assign on an EMPTY centroid frame returns zero rows (the
 pre-r9 k-row-crossJoin contract), not n all-null rows (r9 ADVICE).
 """
@@ -23,48 +24,36 @@ import pyspark.sql.functions as F
 from tests.conftest import SF_DIR
 
 
-def _pin_env(name: str, value: str):
-    prev = os.environ.get(name)
-    os.environ[name] = value
-    return prev
-
-
-def _restore_env(name: str, prev):
-    if prev is None:
-        os.environ.pop(name, None)
-    else:
-        os.environ[name] = prev
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
 
 
 def test_kmeans_core_cache_cannot_change_results(spark):
-    """MFDB_KMEANS_CACHE=0 (refit per call) and =1 (session cache) are
-    the same function for both consumers; a cache HIT serves the same
-    rows as the MISS that populated it."""
-    import modforms_db_spark.llm.dedup as dd
-    import modforms_db_spark.llm.similarity as sim
+    """A cold refit (cache cleared before the call) and the session cache
+    are the same function for both consumers; a cache HIT serves the
+    same rows as the MISS that populated it."""
+    import modforms_db_spark.io as mio
     from modforms_db_spark.registry import get_registry
 
     reg = get_registry()
     q_k = reg["q_cluster_kmeans"].builder
     q_s = reg["q_dedup_semantic"].builder
-    prev = _pin_env("MFDB_KMEANS_CACHE", "0")
     try:
-        cold_k = sorted(map(tuple, q_k(spark, SF_DIR).collect()))
-        cold_s = sorted(map(tuple, q_s(spark, SF_DIR).collect()))
-        os.environ["MFDB_KMEANS_CACHE"] = "1"
-        sim.kmeans_core_cache_clear()
-        miss_k = sorted(map(tuple, q_k(spark, SF_DIR).collect()))
-        hit_k = sorted(map(tuple, q_k(spark, SF_DIR).collect()))
-        # first semantic call with the cache on = MISS for the
-        # _SEM_LABELS_CACHE (populates it); second = HIT (serves it).
-        miss_s = sorted(map(tuple, q_s(spark, SF_DIR).collect()))
-        hit_s = sorted(map(tuple, q_s(spark, SF_DIR).collect()))
+        mio.clear()
+        cold_k = _rows(q_k(spark, SF_DIR))
+        mio.clear()
+        cold_s = _rows(q_s(spark, SF_DIR))
+        mio.clear()
+        miss_k = _rows(q_k(spark, SF_DIR))
+        hit_k = _rows(q_k(spark, SF_DIR))
+        # first semantic call = MISS for its labels over the cached
+        # k-means core (populates them); second = HIT (serves them).
+        miss_s = _rows(q_s(spark, SF_DIR))
+        hit_s = _rows(q_s(spark, SF_DIR))
         assert cold_k == miss_k == hit_k
         assert cold_s == miss_s == hit_s
     finally:
-        _restore_env("MFDB_KMEANS_CACHE", prev)
-        sim.kmeans_core_cache_clear()
-        dd.lsh_core_cache_clear()
+        mio.clear()
 
 
 def test_kmeans_core_cache_keyed_by_dataset(spark):
@@ -72,68 +61,122 @@ def test_kmeans_core_cache_keyed_by_dataset(spark):
     the same entry. Content check uses sf0.1 (sf0.001 and sf0.01 ship
     identical embeddings at 500 rows; only the 2000-row tier can
     distinguish frames by content)."""
+    import modforms_db_spark.io as mio
     import modforms_db_spark.llm.similarity as sim
 
-    prev = _pin_env("MFDB_KMEANS_CACHE", "1")
     try:
-        sim.kmeans_core_cache_clear()
+        mio.clear()
         a1 = sim.kmeans_core(spark, SF_DIR)
         a1b = sim.kmeans_core(spark, SF_DIR + "/")
-        assert a1 is a1b, "normpath must collapse trailing-slash duplicates"
-        other = "/root/testdata/sf0.1"
-        if os.path.isdir(other) and os.path.normpath(other) != os.path.normpath(
-            SF_DIR
-        ):
+        assert a1 is a1b, "abspath must collapse trailing-slash duplicates"
+        other = os.path.join(os.path.dirname(os.path.abspath(SF_DIR)), "sf0.1")
+        if os.path.isdir(other) and other != os.path.abspath(SF_DIR):
             a2 = sim.kmeans_core(spark, other)
             assert a1 is not a2
             assert a1.count() != a2.count(), "distinct datasets, distinct frames"
     finally:
-        _restore_env("MFDB_KMEANS_CACHE", prev)
-        sim.kmeans_core_cache_clear()
+        mio.clear()
 
 
-def test_session_caches_bounded_and_clearable(spark):
-    """Both session caches evict FIFO at their bound (a long-lived
-    session driving many datasets must not pin blocks forever) and
-    expose a clear() that empties them."""
-    import modforms_db_spark.llm.dedup as dd
+def test_session_caches_bounded_and_clearable(spark, tmp_path):
+    """The session cache evicts the least recently used dataset at its
+    bound (a long-lived session driving many datasets must not pin
+    blocks forever), and clear() empties it for real consumers too."""
+    import modforms_db_spark.io as mio
     import modforms_db_spark.llm.similarity as sim
 
-    prev = _pin_env("MFDB_KMEANS_CACHE", "1")
+    builds: list[str] = []
+
+    def probe(d):
+        d = str(d)
+        return mio.cached(spark, d, "probe", lambda: builds.append(d) or object())
+
     try:
-        sim.kmeans_core_cache_clear()
-        # Synthesize distinct keys cheaply: the cache keys on
-        # normpath(sf_dir) BEFORE reading, and the frames are lazy, so
-        # never-executed entries under fake dirs exercise the eviction
-        # policy without I/O.
-        appid = spark.sparkContext.applicationId
-        for i in range(sim._CACHE_MAX + 3):
-            sim._KMEANS_CORE_CACHE[(appid, f"/nonexistent/sf{i}")] = object()
-            while len(sim._KMEANS_CORE_CACHE) > sim._CACHE_MAX:
-                sim._KMEANS_CORE_CACHE.pop(next(iter(sim._KMEANS_CORE_CACHE)))
+        mio.clear()
+        # Cheap lazy entries under never-created dirs exercise the policy
+        # without I/O: the key is abspath(sf_dir), the stamp of a missing
+        # dir is empty.
+        dirs = [tmp_path / f"sf{i}" for i in range(mio._CACHE_MAX)]
+        first = probe(dirs[0])
+        assert probe(dirs[0]) is first and len(builds) == 1  # hit
+        for d in dirs[1:]:
+            probe(d)
+        probe(dirs[0])  # touch: dirs[1] is now least recently used
+        assert len(builds) == mio._CACHE_MAX
+        probe(tmp_path / "sfX")  # over the bound: evicts dirs[1]
+        assert probe(dirs[0]) is first
+        probe(dirs[1])
+        assert builds[-1] == str(dirs[1]), "LRU entry must be rebuilt"
+        # A real consumer: hit until clear(), rebuilt after it.
         real = sim.kmeans_core(spark, SF_DIR)
-        assert len(sim._KMEANS_CORE_CACHE) <= sim._CACHE_MAX
         assert real is sim.kmeans_core(spark, SF_DIR)
-        sim.kmeans_core_cache_clear()
-        assert not sim._KMEANS_CORE_CACHE
-        # LSH cache: same policy, via the real insertion path.
-        dd.lsh_core_cache_clear()
-        g, rp = dd._lsh_groups_rep_pairs(spark, SF_DIR)
-        assert len(dd._LSH_CORE_CACHE) == 1
-        # Pre-fill to the bound with dummies; the next real insert evicts.
-        for i in range(dd._LSH_CACHE_MAX - 1):
-            dd._LSH_CORE_CACHE[(appid, f"/nonexistent/sf{i}")] = (None, None)
-        assert len(dd._LSH_CORE_CACHE) == dd._LSH_CACHE_MAX
-        dd._LSH_CORE_CACHE.pop((appid, os.path.normpath(SF_DIR)))
-        dd._LSH_CORE_CACHE[(appid, "/nonexistent/sfX")] = (None, None)
-        g2, _ = dd._lsh_groups_rep_pairs(spark, SF_DIR)  # insert at bound
-        assert len(dd._LSH_CORE_CACHE) <= dd._LSH_CACHE_MAX
-        dd.lsh_core_cache_clear()
-        assert not dd._LSH_CORE_CACHE
+        mio.clear()
+        assert sim.kmeans_core(spark, SF_DIR) is not real
+        n = len(builds)
+        probe(dirs[0])
+        assert len(builds) == n + 1, "clear() must drop every entry"
     finally:
-        _restore_env("MFDB_KMEANS_CACHE", prev)
-        sim.kmeans_core_cache_clear()
-        dd.lsh_core_cache_clear()
+        mio.clear()
+
+
+def test_rewritten_input_invalidates_session_cache(spark, tmp_path):
+    """An input parquet rewritten in place within one session is re-read:
+    the table reader and the indexes built from it are rebuilt, so the
+    results equal a fresh path's. A relative and an absolute spelling of
+    one dir share one entry."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import modforms_db_spark.io as mio
+    import modforms_db_spark.llm.dedup as dd
+    import modforms_db_spark.llm.similarity as sim
+    from modforms_db_spark.registry import get_registry
+
+    reg = get_registry()
+    q_f = reg["q_dedup_fuzzy_apply"].builder
+    q_k = reg["q_cluster_kmeans"].builder
+
+    def copy_inputs(src, dst):
+        os.makedirs(dst)
+        for f in os.listdir(src):
+            shutil.copyfile(os.path.join(src, f), os.path.join(dst, f))
+
+    d, fresh = str(tmp_path / "in"), str(tmp_path / "fresh")
+    copy_inputs(SF_DIR, d)
+    try:
+        n_old = mio.load(spark, d, "documents").count()
+        old_f, old_k = _rows(q_f(spark, d)), _rows(q_k(spark, d))
+        # Rewrite both index inputs in place, grown to 4 copies of every
+        # row under shifted ids: each document gains exact duplicates.
+        # The file outgrows the old length a stale reader would scan.
+        for t, id_col in (("documents", "doc_id"), ("embeddings", "vec_id")):
+            path = mio.path_for(d, t)
+            tbl = pq.read_table(path)
+            i = tbl.schema.get_field_index(id_col)
+            copies = [
+                tbl.set_column(i, id_col, pc.add(tbl[id_col], k * 10**6))
+                for k in range(4)
+            ]
+            pq.write_table(
+                pa.concat_tables(copies), path, compression="none", use_dictionary=False
+            )
+        copy_inputs(d, fresh)
+
+        assert mio.load(spark, d, "documents").count() == 4 * n_old
+        new_f, new_k = _rows(q_f(spark, d)), _rows(q_k(spark, d))
+        assert new_f == _rows(q_f(spark, fresh))
+        assert new_k == _rows(q_k(spark, fresh))
+        assert new_f != old_f and new_k != old_k, "rewrite must change results"
+
+        rel = os.path.relpath(d)
+        assert sim.kmeans_core(spark, rel) is sim.kmeans_core(spark, d)
+        core = dd._lsh_groups_rep_pairs(spark, d)
+        assert dd._lsh_groups_rep_pairs(spark, rel) is core
+    finally:
+        mio.clear()
 
 
 def test_semantic_pairs_leg_is_broadcast_join(spark):
@@ -151,6 +194,7 @@ def test_semantic_pairs_leg_is_broadcast_join(spark):
     # checkpoint, so re-derive the pairs plan the same way the builder
     # does and audit THAT. Cheaper: audit the full builder's effect by
     # re-running the leg construction here.
+    import modforms_db_spark.io as mio
     import modforms_db_spark.llm.similarity as sim
     from modforms_db_spark.io import spread
     from modforms_db_spark.llm.similarity import _dot, _emb, _norm
@@ -188,7 +232,7 @@ def test_semantic_pairs_leg_is_broadcast_join(spark):
     assert "SortMergeJoin" not in plan, plan
     assert "hashpartitioning(cluster" not in plan, plan
     assert df is not None  # builder constructed without error
-    sim.kmeans_core_cache_clear()
+    mio.clear()
 
 
 def test_kmeans_assign_empty_centroids_returns_zero_rows(spark):
